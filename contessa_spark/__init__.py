@@ -9,7 +9,8 @@ re-expressed Spark-first:
 * all rules over one table evaluate in a **single scan** (one
   ``select`` + one ``agg`` of 3N counters) instead of N sequential scans,
 * consistency checks (COUNT / DIFF) are distributed set operations,
-* results persist to an idempotently-MERGEable quality-check table,
+* results upsert idempotently into a parquet quality-check table,
+  rewritten on the driver (no Spark job),
 * the shipped rule catalog instantiates the DSL as a language-ID +
   quality-filter + PII/toxicity-scrub pipeline over Common-Crawl-style
   web pages (see ``contessa_spark.pipeline``).

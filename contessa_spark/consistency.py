@@ -101,11 +101,10 @@ class ConsistencyChecker:
         time_filter), consistency_checker.py:233-238)."""
         import json
 
-        import pandas as pd
-
         from contessa_spark.results import (
+            CONSISTENCY_CHECK_SCHEMA,
             CONSISTENCY_UPSERT_KEY,
-            LocalSmallTableMerge,
+            ParquetMergeWriter,
         )
 
         ctx = dict(cr.context or {})
@@ -123,8 +122,8 @@ class ConsistencyChecker:
             "task_ts": task_ts,
             "created_at": datetime.utcnow(),
         }
-        LocalSmallTableMerge.merge(
-            pd.DataFrame([row]), path, CONSISTENCY_UPSERT_KEY
+        ParquetMergeWriter.merge(
+            [row], path, CONSISTENCY_UPSERT_KEY, CONSISTENCY_CHECK_SCHEMA
         )
 
     def _side(

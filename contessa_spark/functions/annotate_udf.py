@@ -139,23 +139,6 @@ def annotate_rows(texts):
     return cols
 
 
-def annotate_texts(texts):
-    """Back-compat slice: (lang_pred, lang_conf, ppl, scrubbed, changed).
-    Scrubbed text is materialized (None-coalesced) here."""
-    cols = annotate_rows(texts)
-    scrubbed = [
-        s if s is not None else (t if isinstance(t, str) else "")
-        for s, t in zip(cols["scrubbed_text"], texts)
-    ]
-    return (
-        cols["lang_pred"],
-        cols["lang_conf"],
-        cols["ppl"],
-        scrubbed,
-        cols["pii_changed"],
-    )
-
-
 def spark_udf():
     import pandas as pd
     from pyspark.sql import functions as F

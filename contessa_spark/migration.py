@@ -1,4 +1,4 @@
-"""Schema-version migrations for the parquet/Iceberg result layout.
+"""Schema-version migrations for the parquet result layout.
 
 Spark-native re-expression of the reference's alembic flow:
 ``MigrationsResolver`` (contessa/migration.py:7-132) maps package

@@ -80,16 +80,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.join(keep, id_col, "left_semi")
 
 
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(fp, dup_count, keep_id) for groups with >1 member."""
-    return (
-        df.select(fingerprint_col(text_col).alias("fp"), F.col(id_col))
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("dup_count"), F.min(id_col).alias("keep_id"))
-        .where(F.col("dup_count") > 1)
-    )
-
-
 def dedup_doc_lines(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -238,29 +228,9 @@ def _corpus_span_dedup(
 
 # ------------------------------------------------------------- shingles
 
-def shingle_col(text_col: str = "text", k: int = 3) -> Column:
-    """Distinct word k-gram shingles as array<string>. JVM-side:
-    split → sequence → transform(slice → concat_ws).
-
-    NOTE: higher-order array lambdas are INTERPRETED (no codegen) —
-    measured ~1.8ms/doc on 1.4k-word docs. This form is kept as the
-    SQL-comparable reference; the hot paths use ``shingles_udf``
-    (identical output, ~40× faster)."""
-    words = F.filter(F.split(F.lower(F.col(text_col)), r"(?U)\s+"), lambda x: x != F.lit(""))
-    n = F.size(words)
-    shingles = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-    )
-    # guard: sequence(1, x<1) would count DOWN in Spark
-    return F.when(n >= k, F.array_distinct(shingles)).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def py_shingles(text: str, k: int = 3) -> List[str]:
     """Pure core: distinct word k-gram shingles, first-occurrence order
-    (matches array_distinct of the JVM form)."""
+    (as Spark's array_distinct keeps them)."""
     words = text.lower().split()
     if len(words) < k:
         return []
@@ -980,22 +950,6 @@ def _ngram_jaccard_pairs_blocked(
 
 
 # --------------------------------------------------------- MinHash+LSH
-
-def minhash_signature(
-    shingles: Column, n_hashes: int = 64
-) -> Column:
-    """array<long> of n minhashes — min over xxhash64(shingle, seed_j).
-    Pure JVM; deterministic across partitionings. Reference form — the
-    hot path uses ``band_keys_udf`` (numpy affine minhash, same
-    collision statistics, ~40× faster than n interpreted transforms)."""
-    sigs = [
-        F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, F.lit(j)))
-        )
-        for j in range(n_hashes)
-    ]
-    return F.array(*sigs)
-
 
 _MERSENNE = (1 << 61) - 1
 

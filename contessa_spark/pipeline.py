@@ -50,6 +50,7 @@ from contessa_spark.results import (
     QUALITY_CHECK_SCHEMA,
     UPSERT_KEY,
     LocalSmallTableMerge,
+    ParquetMergeWriter,
     percentage,
 )
 from contessa_spark.rules import get_rule_cls
@@ -500,17 +501,12 @@ class QualityFilterPipeline:
         merged_lineage = LocalSmallTableMerge.merge(
             lineage_rows, lineage_path, LINEAGE_KEY
         )
-        import pandas as pd
-
-        qrows = self._quality_rows(merged_lineage, task_ts)
-        qpdf = pd.DataFrame(qrows, columns=[f.name for f in QUALITY_CHECK_SCHEMA.fields])
-        # pin dtypes so all-None columns stay typed in parquet
-        for c in ("median_30_day_failed", "median_30_day_passed",
-                  "failed_percentage", "passed_percentage"):
-            qpdf[c] = qpdf[c].astype("float64")
-        for c in ("total_records", "failed", "passed"):
-            qpdf[c] = qpdf[c].astype("int64")
-        LocalSmallTableMerge.merge(qpdf, self.quality_path, UPSERT_KEY)
+        ParquetMergeWriter.merge(
+            self._quality_rows(merged_lineage, task_ts),
+            self.quality_path,
+            UPSERT_KEY,
+            QUALITY_CHECK_SCHEMA,
+        )
 
         return {
             "input": int(merged_lineage["input_count"].sum()),
@@ -545,9 +541,7 @@ class QualityFilterPipeline:
                     "status": "invalid" if failed > 0 else "valid",
                     "time_filter": "not_set",
                     "task_ts": task_ts,
-                    # naive-UTC to keep the result schema tz-free
-                    # (datetime.utcnow is deprecated in 3.12+)
-                    "created_at": datetime.now(timezone.utc).replace(tzinfo=None),
+                    "created_at": datetime.now(timezone.utc),
                 }
             )
         return out

@@ -9,14 +9,11 @@ Reference: contessa/models.py — QualityCheck row schema
 
 Spark realization: a fixed StructType (no dynamic per-table classes —
 the table *name* is the parameter), widened counters to LongType for
-10^12-row scale, and a pluggable writer:
-
-* ``IcebergMergeWriter`` — real deployment: ``MERGE INTO`` keyed on the
-  identity (+ optional ``partition_id`` for per-partition lineage /
-  checkpoint-resume);
-* ``ParquetMergeWriter`` — sandbox fallback: anti-join old rows against
-  the new key set, union, atomic directory swap. Same observable
-  upsert semantics.
+10^12-row scale. A result table is a parquet directory upserted on the
+driver with pandas + pyarrow, no Spark job: ``ParquetMergeWriter``
+types the rows from the schema and ``LocalSmallTableMerge`` replaces
+rows by key and swaps the directory. Timestamps are stored UTC-adjusted
+in microseconds, as Spark writes ``TimestampType``.
 """
 
 from __future__ import annotations
@@ -25,11 +22,9 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
-from datetime import date, datetime, timedelta
+from datetime import date, datetime
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from contessa_spark.rules import Rule
@@ -192,7 +187,6 @@ def build_quality_rows(
 
 
 def medians_30_day(
-    spark: SparkSession,
     result_path: str,
     today: Optional[date] = None,
     days: int = 30,
@@ -201,90 +195,85 @@ def medians_30_day(
     (contessa/models.py:129-151). Computed BEFORE the current run's
     rows are merged, so the current run is excluded (ordering caveat,
     SURVEY §4). Whole-table scope (the reference applies no per-rule
-    filter). Uses Spark's exact ``median`` aggregate — a single
-    pass over the (tiny) result table.
+    filter); the window is ``today-days 00:00 UTC <= task_ts <= today
+    00:00 UTC``. Interpolated median ignoring nulls, as Spark's and
+    DuckDB's ``median``; ``None`` when the window holds no value.
     """
-    empty = {"failed": None, "passed": None}
-    reader = _existing_df(spark, result_path, QUALITY_CHECK_SCHEMA)
-    if reader is None:
-        return empty
-    now = today or date.today()
-    past = now - timedelta(days=days)
-    row = (
-        reader.where(
-            (F.col("task_ts") >= F.lit(str(past))) & (F.col("task_ts") <= F.lit(str(now)))
-        )
-        .agg(
-            F.median("failed").alias("mf"),
-            F.median("passed").alias("mp"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .collect()[0]
-    )
-    if row["n"] == 0:
-        return empty
-    return {"failed": row["mf"], "passed": row["mp"]}
+    import pandas as pd
+
+    table = LocalSmallTableMerge.read(result_path)
+    if table is None:
+        return {"failed": None, "passed": None}
+    now = pd.Timestamp(today or date.today(), tz="UTC")
+    ts = table["task_ts"]
+    window = table[(ts >= now - pd.Timedelta(days=days)) & (ts <= now)]
+    out = {}
+    for c in ("failed", "passed"):
+        m = window[c].median()
+        out[c] = None if pd.isna(m) else float(m)
+    return out
 
 
-def _existing_df(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> Optional[DataFrame]:
-    if path.startswith("iceberg:"):
-        name = path[len("iceberg:") :]
-        try:
-            return spark.table(name)
-        except Exception:
-            return None
-    if os.path.exists(path):
-        return spark.read.schema(schema).parquet(path)
-    return None
+def _utc(frame):
+    """Every timestamp column as UTC-adjusted time, the one convention
+    of the result tables (what Spark's TimestampType writes). Naive
+    values are taken as UTC: ``get_spark`` pins the session time zone
+    to UTC. One unit as well, so equal keys compare equal."""
+    import pandas as pd
+
+    frame = frame.copy()
+    for c in frame.columns:
+        if pd.api.types.is_datetime64_any_dtype(frame[c]):
+            frame[c] = pd.to_datetime(frame[c], utc=True).dt.as_unit("ns")
+    return frame
+
+
+# pandas dtype per Spark type of the result schemas
+_PANDAS_DTYPE = {
+    T.StringType: "string",
+    T.LongType: "Int64",
+    T.DoubleType: "float64",
+    T.TimestampType: object,
+}
 
 
 class ParquetMergeWriter:
-    """Upsert into a parquet result table by key anti-join + swap.
+    """Typed row upsert: row dicts become a frame typed from a Spark
+    schema, which ``LocalSmallTableMerge.merge`` upserts. Every result
+    table of checks (runner, pipeline, consistency) is written here,
+    so one table always has the same parquet types. A ``None`` in a
+    non-nullable field raises, as Spark does when it builds a DataFrame
+    from rows."""
 
-    Sandbox stand-in for Iceberg ``MERGE INTO`` — same observable
-    semantics as contessa/db.py:61-88 (re-running a check for the same
-    task_ts replaces the row). The result table is tiny (one row per
-    rule per run), so the rewrite is cheap; at production scale use
-    ``IcebergMergeWriter``.
-    """
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
+    @staticmethod
     def merge(
-        self,
-        rows_df: DataFrame,
-        path: str,
-        key_cols: List[str],
-        schema: T.StructType,
-    ) -> None:
-        existing = _existing_df(self.spark, path, schema)
-        if existing is not None:
-            # broadcast the new (small) side; anti-join drops replaced keys
-            kept = existing.join(F.broadcast(rows_df.select(*key_cols)), key_cols, "left_anti")
-            merged = kept.unionByName(rows_df)
-        else:
-            merged = rows_df
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.rename(tmp, path)
+        rows: List[dict], path: str, key_cols: List[str], schema: T.StructType
+    ):
+        import pandas as pd
+
+        cols = {}
+        for f in schema.fields:
+            values = [r.get(f.name) for r in rows]
+            if not f.nullable and any(v is None for v in values):
+                raise ValueError(
+                    f"field {f.name}: This field is not nullable, but got None."
+                )
+            col = pd.Series(values, dtype=_PANDAS_DTYPE[type(f.dataType)])
+            if isinstance(f.dataType, T.TimestampType):
+                col = pd.to_datetime(col, utc=True)
+            cols[f.name] = col
+        return LocalSmallTableMerge.merge(pd.DataFrame(cols), path, key_cols)
 
 
 class LocalSmallTableMerge:
-    """Driver-side upsert for TINY control tables (lineage, quality) —
-    pandas + pyarrow, zero Spark jobs.
+    """Driver-side upsert of a small parquet table (result and lineage
+    tables) with pandas + pyarrow: zero Spark jobs.
 
-    Rationale: at any scale these tables hold one row per
-    bucket/rule/run — thousands of rows, not data-plane rows. Running
-    a Spark job (scheduler round-trip, shuffle file, commit protocol)
-    per merge costs seconds of fixed latency per pipeline run; a
-    driver-side parquet rewrite is milliseconds with identical upsert
-    semantics. Production swaps this for Iceberg MERGE INTO, same
-    interface.
+    These tables hold one row per bucket/rule/run — thousands of rows,
+    not data-plane rows — so a driver-side rewrite takes milliseconds
+    where a Spark merge job (scheduler round-trip, shuffle file, commit
+    protocol) costs seconds. Same semantics as contessa/db.py:61-88:
+    re-running a check for the same key replaces its row.
     """
 
     @staticmethod
@@ -296,7 +285,7 @@ class LocalSmallTableMerge:
         files = sorted(glob.glob(os.path.join(path, "*.parquet")))
         if not files:
             return None
-        return pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
+        return _utc(pd.concat([pd.read_parquet(f) for f in files], ignore_index=True))
 
     @classmethod
     def merge(cls, new_pdf, path: str, key_cols: List[str]) -> "object":
@@ -305,6 +294,7 @@ class LocalSmallTableMerge:
         import pandas as pd
 
         existing = cls.read(path)
+        new_pdf = _utc(new_pdf)
         if existing is not None and len(existing) and not len(new_pdf):
             # nothing to upsert (e.g. a fully-resumed run): the table is
             # already the merge result — and concatenating an EMPTY
@@ -356,29 +346,3 @@ class LocalSmallTableMerge:
             shutil.rmtree(path)
         os.rename(tmp, path)
         return merged
-
-
-class IcebergMergeWriter:
-    """Production writer: real ``MERGE INTO`` keyed on the upsert
-    identity — atomic, snapshot-isolated, scan-free for unchanged
-    partitions. Requires an Iceberg catalog on the session (not
-    available in this sandbox; tested via SQL-text golden tests only).
-    """
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def merge_sql(self, table: str, source_view: str, key_cols: List[str]) -> str:
-        on = " AND ".join(f"t.{c} <=> s.{c}" for c in key_cols)
-        return (
-            f"MERGE INTO {table} t USING {source_view} s ON {on} "
-            f"WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
-
-    def merge(self, rows_df: DataFrame, table: str, key_cols: List[str], schema=None) -> None:
-        view = f"_merge_src_{uuid.uuid4().hex[:8]}"
-        rows_df.createOrReplaceTempView(view)
-        try:
-            self.spark.sql(self.merge_sql(table, view, key_cols))
-        finally:
-            self.spark.catalog.dropTempView(view)

@@ -15,8 +15,10 @@ mapping (SURVEY §3.1):
 6. enrich with percentages/status/30-day medians (medians computed
    BEFORE merging the current rows — contessa ordering caveat,
    models.py:111 vs runner.py:58);
-7. MERGE-upsert into the result table keyed on
-   (attribute, rule_name, rule_type, task_ts, time_filter).
+7. upsert into the result table keyed on
+   (attribute, rule_name, rule_type, task_ts, time_filter) — a parquet
+   directory rewritten on the driver (``results.ParquetMergeWriter``),
+   so persisting starts no Spark job.
 
 No global executor singleton (the reference's is documented
 not-thread-safe, contessa/executor.py:91-93) — context is threaded
@@ -45,15 +47,8 @@ from contessa_spark.table import Table
 
 
 class QualityRunner:
-    def __init__(self, spark: SparkSession, writer=None, row_builder=None):
-        """``row_builder(rules, agg_results, task_ts, medians) -> rows``
-        is the Spark analogue of the reference's ``special_qc_map``
-        (contessa/runner.py:29,124-140 — swap the persisted row shape
-        per result table); defaults to the standard QualityCheck rows.
-        """
+    def __init__(self, spark: SparkSession):
         self.spark = spark
-        self.writer = writer or ParquetMergeWriter(spark)
-        self.row_builder = row_builder or build_quality_rows
 
     def run(
         self,
@@ -69,8 +64,8 @@ class QualityRunner:
 
         ``check_df`` is the checked table as a DataFrame (parquet /
         Iceberg / view — anything). ``check_table`` supplies naming for
-        the Jinja context; ``result_table_path`` switches persistence on
-        (parquet path or ``iceberg:<ident>``), else in-memory
+        the Jinja context; ``result_table_path`` (a parquet directory)
+        switches persistence on, else in-memory
         CheckResults are returned (contessa/runner.py:46-52).
         """
         tbl = Table(**check_table) if check_table else Table(None, "check_table")
@@ -100,10 +95,9 @@ class QualityRunner:
         ordered = [agg_results[id(r)] for r in rules]
 
         if result_table_path:
-            medians = medians_30_day(self.spark, result_table_path, today=today)
-            rows = self.row_builder(rules, ordered, task_ts, medians)
-            rows_df = self.spark.createDataFrame(rows, schema=QUALITY_CHECK_SCHEMA)
-            self.writer.merge(rows_df, result_table_path, UPSERT_KEY, QUALITY_CHECK_SCHEMA)
+            medians = medians_30_day(result_table_path, today=today)
+            rows = build_quality_rows(rules, ordered, task_ts, medians)
+            ParquetMergeWriter.merge(rows, result_table_path, UPSERT_KEY, QUALITY_CHECK_SCHEMA)
             return rows
 
         out: List[CheckResult] = []

@@ -21,12 +21,12 @@ def get_spark(
     task_cpus: int = 1,
     extra_conf: dict = None,
 ) -> SparkSession:
-    """``task_cpus=2`` is the right setting for pandas-UDF-heavy jobs:
-    each UDF task keeps BOTH a JVM serde thread and a Python worker
-    busy, so scheduling cores/1 tasks runs 2× cores runnable threads —
-    a measurable convoy collapse at high core counts (38s vs 2.3s for
-    the same stage at local[32] in this sandbox). Modeling the true
-    cost with task.cpus=2 restores linear scaling."""
+    """``task_cpus`` sets ``spark.task.cpus``; keep the default 1.
+    ``task_cpus=2`` (one slot per JVM serde thread + Python worker pair
+    of a pandas-UDF task) was measured on the quality-filter pipeline
+    and rejected: scaling efficiency rose to 0.76 but docs/sec halved
+    with half the cores idle (BENCH.md, "spark.task.cpus=2"). The
+    scaling scripts still pass it to reproduce that measurement."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     if shuffle_partitions is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

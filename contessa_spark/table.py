@@ -6,7 +6,7 @@ prefixes the table name with ``quality_check_`` / ``consistency_check_``.
 
 Spark realization: the checked table is either a catalog identifier
 (``spark.table``) or a parquet/Iceberg path; the result table is a
-path (sandbox) or Iceberg identifier (production). Dynamic per-table
+parquet directory upserted on the driver (``results.py``). Dynamic per-table
 SQLAlchemy classes are unnecessary — a fixed schema + table-name
 parameter replaces them (SURVEY §2.3).
 """

@@ -70,23 +70,6 @@ def test_generator_pure_function_of_seed_and_id(i, seed):
     assert a["lang"] in langid.LANGS
 
 
-def test_iceberg_merge_sql_golden():
-    """MERGE INTO text for the contessa upsert identity
-    (contessa/db.py:61-88 → Iceberg MERGE)."""
-    from contessa_spark.results import UPSERT_KEY, IcebergMergeWriter
-
-    sql = IcebergMergeWriter.__new__(IcebergMergeWriter).merge_sql(
-        "warehouse.dq.quality_check_pages", "batch", UPSERT_KEY
-    )
-    assert sql == (
-        "MERGE INTO warehouse.dq.quality_check_pages t USING batch s ON "
-        "t.attribute <=> s.attribute AND t.rule_name <=> s.rule_name AND "
-        "t.rule_type <=> s.rule_type AND t.task_ts <=> s.task_ts AND "
-        "t.time_filter <=> s.time_filter "
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-    )
-
-
 def test_time_filter_sql_text_golden():
     """Spark-SQL render parity with the reference's golden strings
     (test/unit/test_executor.py:22-94 shape, Spark literal syntax)."""

@@ -1,6 +1,7 @@
 """End-to-end runner parity (test/integration/test_runner.py:89-153,
 FIXTURES.md F4) + persistence/upsert/median semantics."""
 
+import os
 from datetime import date, datetime
 
 import pytest
@@ -62,56 +63,114 @@ def test_runner_e2e_in_memory(spark, booking):
 
 
 def test_runner_persists_and_upserts(spark, booking, tmp_path):
-    path = str(tmp_path / "quality_check_booking")
+    check_table = {"schema_name": "tmp", "table_name": "booking_all_v2"}
+    # the first run's rows stored by the runner, and the same rows
+    # stored by Spark's own parquet writer (its timestamp encoding)
+    for first_writer in ("runner", "spark"):
+        path = str(tmp_path / f"quality_check_booking_{first_writer}")
+        runner = QualityRunner(spark)
+        rows = runner.run(
+            RULES,
+            booking,
+            check_table=check_table,
+            result_table_path=path,
+            context={"task_ts": TASK_TS},
+            today=date(2018, 9, 12),
+        )
+        if first_writer == "spark":
+            spark.createDataFrame(rows, schema=QUALITY_CHECK_SCHEMA).write.mode(
+                "overwrite"
+            ).parquet(path)
+        assert len(rows) == 4
+        stored = spark.read.schema(QUALITY_CHECK_SCHEMA).parquet(path)
+        assert stored.count() == 4
+        # first run: result table was empty at median time
+        assert all(r["median_30_day_failed"] is None for r in stored.collect())
+
+        # re-run same task_ts → rows REPLACED, not duplicated (db.py:61-88)
+        runner.run(
+            RULES,
+            booking,
+            check_table=check_table,
+            result_table_path=path,
+            context={"task_ts": TASK_TS},
+            today=date(2018, 9, 12),
+        )
+        stored = spark.read.schema(QUALITY_CHECK_SCHEMA).parquet(path)
+        assert stored.count() == 4
+        # same-day rerun: the median window cutoff is the DATE string
+        # (models.py:140-141) so the noon rows of 2018-09-12 are NOT <=
+        # '2018-09-12' — medians stay None, matching the reference quirk
+        assert all(r["median_30_day_failed"] is None for r in stored.collect())
+
+        # new task_ts a day later → rows appended; medians now see run 1
+        runner.run(
+            RULES,
+            booking,
+            check_table=check_table,
+            result_table_path=path,
+            context={"task_ts": datetime(2018, 9, 13, 12, 0)},
+            today=date(2018, 9, 13),
+        )
+        stored = spark.read.schema(QUALITY_CHECK_SCHEMA).parquet(path)
+        assert stored.count() == 8
+        meds = {
+            r["rule_name"]: r["median_30_day_failed"]
+            for r in stored.collect()
+            if r["task_ts"] == datetime(2018, 9, 13, 12, 0)
+        }
+        # median over run-1 failed values 1,3,1,1 → 1.0
+        assert meds["gt_name"] == 1.0
+
+
+def test_upsert_matches_naive_and_utc_adjusted_task_ts(tmp_path):
+    """A stored UTC-adjusted task_ts (what Spark writes) and a naive one
+    for the same instant are the same key: the row is replaced."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from contessa_spark.results import LocalSmallTableMerge
+
+    path = str(tmp_path / "t")
+    key = ["name", "task_ts"]
+    stored = pd.DataFrame(
+        {"name": ["a"], "task_ts": pd.to_datetime([TASK_TS]).tz_localize("UTC"), "v": [1]}
+    )
+    os.makedirs(path)
+    stored.to_parquet(os.path.join(path, "part-0.parquet"), coerce_timestamps="us")
+    LocalSmallTableMerge.merge(
+        pd.DataFrame({"name": ["a"], "task_ts": [TASK_TS], "v": [2]}), path, key
+    )
+    table = pq.read_table(path)
+    assert table.num_rows == 1
+    assert table.column("v").to_pylist() == [2]
+    assert str(table.schema.field("task_ts").type) == "timestamp[us, tz=UTC]"
+
+
+def test_persisting_starts_no_spark_job(spark, booking, tmp_path):
+    """Medians and the upsert run on the driver: a run that persists
+    starts as many Spark jobs as one that does not."""
+    path = str(tmp_path / "quality_check_jobs")
     runner = QualityRunner(spark)
-    rows = runner.run(
-        RULES,
-        booking,
-        check_table={"schema_name": "tmp", "table_name": "booking_all_v2"},
-        result_table_path=path,
-        context={"task_ts": TASK_TS},
-        today=date(2018, 9, 12),
-    )
-    assert len(rows) == 4
-    stored = spark.read.schema(QUALITY_CHECK_SCHEMA).parquet(path)
-    assert stored.count() == 4
-    # first run: result table was empty at median time
-    assert all(r["median_30_day_failed"] is None for r in stored.collect())
-
-    # re-run same task_ts → rows REPLACED, not duplicated (db.py:61-88)
-    runner.run(
-        RULES,
-        booking,
-        check_table={"schema_name": "tmp", "table_name": "booking_all_v2"},
-        result_table_path=path,
-        context={"task_ts": TASK_TS},
-        today=date(2018, 9, 12),
-    )
-    stored = spark.read.schema(QUALITY_CHECK_SCHEMA).parquet(path)
-    assert stored.count() == 4
-    # same-day rerun: the median window cutoff is the DATE string
-    # (models.py:140-141) so the noon rows of 2018-09-12 are NOT <=
-    # '2018-09-12' — medians stay None, matching the reference quirk
-    assert all(r["median_30_day_failed"] is None for r in stored.collect())
-
-    # new task_ts a day later → rows appended; medians now see run 1
-    runner.run(
-        RULES,
-        booking,
-        check_table={"schema_name": "tmp", "table_name": "booking_all_v2"},
-        result_table_path=path,
-        context={"task_ts": datetime(2018, 9, 13, 12, 0)},
-        today=date(2018, 9, 13),
-    )
-    stored = spark.read.schema(QUALITY_CHECK_SCHEMA).parquet(path)
-    assert stored.count() == 8
-    meds = {
-        r["rule_name"]: r["median_30_day_failed"]
-        for r in stored.collect()
-        if r["task_ts"] == datetime(2018, 9, 13, 12, 0)
+    kw = {
+        "check_table": {"schema_name": "tmp", "table_name": "booking_all_v2"},
+        "context": {"task_ts": datetime(2018, 9, 13, 12, 0)},
+        "today": date(2018, 9, 13),
     }
-    # median over run-1 failed values 1,3,1,1 → 1.0
-    assert meds["gt_name"] == 1.0
+    # a stored earlier run, so the medians have rows to read
+    runner.run(RULES, booking, result_table_path=path, **dict(kw, context={"task_ts": TASK_TS}))
+    sc = spark.sparkContext
+    jobs = {}
+    for mode, result_path in (("in_memory", None), ("persisting", path)):
+        group = f"test_persisting_starts_no_spark_job.{mode}"
+        sc.setJobGroup(group, mode)
+        try:
+            runner.run(RULES, booking, result_table_path=result_path, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[mode] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["in_memory"] > 0
+    assert jobs["persisting"] == jobs["in_memory"]
 
 
 def test_median_30_day_window(spark, tmp_path):
@@ -148,7 +207,7 @@ def test_median_30_day_window(spark, tmp_path):
         for f, p, ts in seed
     ]
     spark.createDataFrame(rows, schema=QUALITY_CHECK_SCHEMA).write.parquet(path)
-    med = medians_30_day(spark, path, today=date(2018, 9, 12))
+    med = medians_30_day(path, today=date(2018, 9, 12))
     assert med == {"failed": 10.5, "passed": 155.0}
 
 
