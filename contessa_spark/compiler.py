@@ -5,9 +5,15 @@ counting rows in a Python loop (contessa/runner.py:77-86,
 contessa/rules.py:61-102). Here all Column-expressible rules over a
 table compile into **one** DataFrame pass: a single ``agg`` of 3N
 counters (total/passed/failed per rule). Catalyst handles partial
-(map-side) + final aggregation, so the whole quality-check run is one
-scan + one tiny shuffle regardless of rule count — the plan that
-survives a 100 TB table.
+(map-side) + final aggregation, so the counts of a quality-check run
+are one scan + one tiny shuffle regardless of rule count — the plan
+that survives a 100 TB table.
+
+Failed examples cost more. With ``collect_examples > 0`` each failing
+rule adds one ``limit`` job, and that job scans the whole table when
+the rule has fewer failing rows than ``collect_examples``. Only
+in-memory runs ask for examples; a persisted ``QualityRunner`` run
+passes 0 (the result table has no example column) and adds none.
 
 Counting semantics (exact parity with contessa/rules.py:84-93):
 
@@ -75,10 +81,11 @@ def run_column_rules(
 ) -> List[AggregatedResult]:
     """Evaluate every Column-expressible rule in ONE scan of ``df``.
 
-    Examples (failing values) are fetched lazily per rule via
-    ``limit(n)`` — Spark's CollectLimit stops early, never a full-set
-    driver collect (unlike the reference's O(failures) Python set,
-    contessa/rules.py:74-95).
+    Examples (failing values) are fetched per failing rule via
+    ``limit(n)``, one extra job each, never a full-set driver collect
+    (unlike the reference's O(failures) Python set,
+    contessa/rules.py:74-95). CollectLimit stops early only once it
+    has ``n`` rows; ``collect_examples=0`` skips these jobs.
     """
     if not rules:
         return []

@@ -11,7 +11,10 @@ mapping (SURVEY §3.1):
 4. ensure result table / else in-memory ``CheckResult``;
 5. execute — **one DataFrame pass for all Column rules** (the
    idiomatic-Spark win over the reference's per-rule scans,
-   runner.py:77-86) + one ``spark.sql`` plan per CustomSqlRule;
+   runner.py:77-86) + one ``spark.sql`` plan per CustomSqlRule; an
+   in-memory run adds one ``limit`` job per failing rule for its
+   ``collect_examples`` failed examples, a persisted run none (the
+   result table has no example column);
 6. enrich with percentages/status/30-day medians (medians computed
    BEFORE merging the current rows — contessa ordering caveat,
    models.py:111 vs runner.py:58);
@@ -67,6 +70,8 @@ class QualityRunner:
         the Jinja context; ``result_table_path`` (a parquet directory)
         switches persistence on, else in-memory
         CheckResults are returned (contessa/runner.py:46-52).
+        ``collect_examples`` caps each in-memory CheckResult's
+        ``failed_example``; a persisted run collects none.
         """
         tbl = Table(**check_table) if check_table else Table(None, "check_table")
         ctx = self.get_context(tbl, context)
@@ -82,15 +87,17 @@ class QualityRunner:
         column_rules = [r for r in rules if isinstance(r, OneColumnRule) and not isinstance(r, CustomSqlRule)]
         sql_rules = [r for r in rules if isinstance(r, CustomSqlRule)]
 
+        # the result table has no example column
+        examples = 0 if result_table_path else collect_examples
         agg_results = {}
         for rule, res in zip(
             column_rules,
-            run_column_rules(check_df, column_rules, task_ts, collect_examples),
+            run_column_rules(check_df, column_rules, task_ts, examples),
         ):
             agg_results[id(rule)] = res
         for rule in sql_rules:
             agg_results[id(rule)] = run_custom_sql_rule(
-                self.spark, rule, ctx, collect_examples
+                self.spark, rule, ctx, examples
             )
         ordered = [agg_results[id(r)] for r in rules]
 

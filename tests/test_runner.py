@@ -148,8 +148,10 @@ def test_upsert_matches_naive_and_utc_adjusted_task_ts(tmp_path):
 
 
 def test_persisting_starts_no_spark_job(spark, booking, tmp_path):
-    """Medians and the upsert run on the driver: a run that persists
-    starts as many Spark jobs as one that does not."""
+    """Medians and the upsert run on the driver, and a persisted run
+    collects no failed examples (the result table has no example
+    column): it starts as many Spark jobs as an in-memory run without
+    examples, and fewer than one that collects them."""
     path = str(tmp_path / "quality_check_jobs")
     runner = QualityRunner(spark)
     kw = {
@@ -161,16 +163,41 @@ def test_persisting_starts_no_spark_job(spark, booking, tmp_path):
     runner.run(RULES, booking, result_table_path=path, **dict(kw, context={"task_ts": TASK_TS}))
     sc = spark.sparkContext
     jobs = {}
-    for mode, result_path in (("in_memory", None), ("persisting", path)):
+    for mode, result_path, examples in (
+        ("in_memory_no_examples", None, 0),
+        ("in_memory_examples", None, 10),
+        ("persisting", path, 10),
+    ):
         group = f"test_persisting_starts_no_spark_job.{mode}"
         sc.setJobGroup(group, mode)
         try:
-            runner.run(RULES, booking, result_table_path=result_path, **kw)
+            runner.run(
+                RULES, booking, result_table_path=result_path, collect_examples=examples, **kw
+            )
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[mode] = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs["in_memory"] > 0
-    assert jobs["persisting"] == jobs["in_memory"]
+    assert jobs["in_memory_no_examples"] > 0
+    assert jobs["persisting"] == jobs["in_memory_no_examples"]
+    assert jobs["persisting"] < jobs["in_memory_examples"]
+
+
+def test_runner_in_memory_returns_failed_examples(spark, booking):
+    """Without a result table the runner returns failed examples for
+    every failing rule, the ``sql`` rule included."""
+    out = QualityRunner(spark).run(
+        RULES,
+        booking,
+        check_table={"schema_name": "tmp", "table_name": "booking_all_v2"},
+        context={"task_ts": TASK_TS},
+    )
+    examples = {r.rule_name: sorted(r.failed_example, key=repr) for r in out if r.failed > 0}
+    assert examples == {
+        "not_null_name": [(None,)],
+        "gt_name": [(1,), (4,), (4,)],
+        "sql_name": [(False,)],
+        "not_name": [("VIE",)],
+    }
 
 
 def test_median_30_day_window(spark, tmp_path):
