@@ -85,8 +85,11 @@ class PipelineConfig:
     #   checkpoint unit is the input shard (exactly how crawl pipelines
     #   checkpoint per WARC file): ZERO shuffle, naturally one output
     #   file per bucket, resume valid while the input listing/split is
-    #   unchanged (guarded: run() fingerprints the input listing + split
-    #   conf and refuses a resume on mismatch).
+    #   unchanged (guarded: run() fingerprints the input listing and
+    #   every setting that decides the split layout — maxPartitionBytes,
+    #   openCostInBytes, minPartitionNum, leafNodeDefaultParallelism,
+    #   defaultParallelism and maxPartitionNum — and refuses a resume on
+    #   mismatch).
     # DEFAULT is "url" because it is the only mode whose bucket ids are
     # reproducible for ad-hoc inputs with no stable file listing; for
     # production file-backed runs PREFER "input_partition" — it is what
@@ -167,16 +170,16 @@ def annotate(df: DataFrame) -> DataFrame:
     """
     from contessa_spark.functions import annotate_udf
 
-    out = df.withColumn("_ann", annotate_udf.spark_udf()(F.col("text")))
-    for name, _ in annotate_udf.FIELDS:
-        if name == "scrubbed_text":
-            # the UDF returns NULL when no scrub changed the text
-            out = out.withColumn(
-                name, F.coalesce(F.col("_ann.scrubbed_text"), F.col("text"))
-            )
-        else:
-            out = out.withColumn(name, F.col(f"_ann.{name}"))
-    return out.drop("_ann")
+    fields = {name: F.col(f"_ann.{name}") for name, _ in annotate_udf.FIELDS}
+    # the UDF returns NULL when no scrub changed the text
+    fields["scrubbed_text"] = F.coalesce(fields["scrubbed_text"], F.col("text"))
+    # one projection per column group: every withColumn call re-analyses
+    # the whole plan, Python UDF included
+    return (
+        df.withColumn("_ann", annotate_udf.spark_udf()(F.col("text")))
+        .withColumns(fields)
+        .drop("_ann")
+    )
 
 
 def _rule_predicates(cfg: PipelineConfig) -> Dict[str, Column]:
@@ -194,21 +197,22 @@ def with_decisions(
 ) -> DataFrame:
     """Add per-rule boolean columns + the keep conjunction (+ bucket id
     unless the input already carries one)."""
-    preds = _rule_predicates(cfg)
-    out = annotated
-    for name, pred in preds.items():
-        out = out.withColumn(f"rule_{name}", pred.eqNullSafe(F.lit(True)))
+    out = annotated.withColumns(
+        {
+            f"rule_{name}": pred.eqNullSafe(F.lit(True))
+            for name, pred in _rule_predicates(cfg).items()
+        }
+    )
     keep = None
     for name in keep_rule_names(cfg):
         c = F.col(f"rule_{name}")
         keep = c if keep is None else (keep & c)
-    out = out.withColumn("keep", keep)
+    decided = {"keep": keep}
     if bucket:
-        out = out.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)).cast("int"),
-        )
-    return out
+        decided["bucket"] = F.pmod(
+            F.xxhash64(F.col("url")), F.lit(cfg.n_buckets)
+        ).cast("int")
+    return out.withColumns(decided)
 
 
 LINEAGE_KEY = ["bucket"]
@@ -279,15 +283,23 @@ class QualityFilterPipeline:
     # ---- input fingerprint (input_partition resume guard) ---------
 
     def _input_fingerprint(self, df: DataFrame) -> Dict:
-        """In ``input_partition`` mode the bucket id IS the input split:
-        it depends on the file listing, ``maxPartitionBytes`` and the
-        default parallelism. A resume under a different listing/conf
-        would silently remap bucket ids — skipping or duplicating the
-        wrong rows — so the identifying inputs are fingerprinted here
-        and verified on resume (same pattern as check_schema_version)."""
+        """In ``input_partition`` mode the bucket id IS the input split.
+        Spark cuts splits of at most ``min(maxPartitionBytes,
+        max(openCostInBytes, total / floor))`` bytes, where ``total``
+        counts ``openCostInBytes`` once per file and the floor is
+        ``minPartitionNum``, else ``leafNodeDefaultParallelism``, else
+        ``defaultParallelism``; ``maxPartitionNum``, when set, then
+        merges splits down towards it. So the layout depends on the file
+        listing and on those six settings, and all of them are recorded
+        (``None`` for the ones left unset, apart from
+        ``openCostInBytes``, whose effective value is recorded). A
+        resume under a different listing/conf would silently remap
+        bucket ids — skipping or duplicating the wrong rows — so it is
+        verified on resume (same pattern as check_schema_version)."""
         import hashlib
 
         files = sorted(df.inputFiles())
+        conf = self.spark.conf
         return {
             "n_files": len(files),
             "files_md5": (
@@ -295,10 +307,14 @@ class QualityFilterPipeline:
                 if files
                 else None
             ),
-            "max_partition_bytes": self.spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", None
-            ),
+            "max_partition_bytes": conf.get("spark.sql.files.maxPartitionBytes", None),
             "default_parallelism": self.spark.sparkContext.defaultParallelism,
+            "min_partition_num": conf.get("spark.sql.files.minPartitionNum", None),
+            "leaf_node_default_parallelism": conf.get(
+                "spark.sql.leafNodeDefaultParallelism", None
+            ),
+            "open_cost_in_bytes": conf.get("spark.sql.files.openCostInBytes"),
+            "max_partition_num": conf.get("spark.sql.files.maxPartitionNum", None),
         }
 
     def check_input_fingerprint(
@@ -365,9 +381,9 @@ class QualityFilterPipeline:
             self.check_input_fingerprint(df, resuming=resuming, fp=input_fp)
         # compact per-row form for lineage (schema v2): every checkpoint
         # row records which input listing/split produced it
-        input_fp_str = (
-            f"{input_fp['files_md5'] or 'nofiles'}:{input_fp['n_files']}:"
-            f"{input_fp['max_partition_bytes']}:{input_fp['default_parallelism']}"
+        input_fp_str = ":".join(
+            [input_fp["files_md5"] or "nofiles"]
+            + [str(v) for k, v in input_fp.items() if k != "files_md5"]
         )
         lineage_path = (
             self.validate_lineage_path if mode == "validate" else self.lineage_path

@@ -45,14 +45,15 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # Scan-parallelism FLOOR (not a split-size cap): a single
-        # ~100 MB parquet file is one 128 MB split by default, so every
-        # scan-heavy stage over it serializes onto one core; the floor
-        # makes Spark shrink splits just enough to hand each core work
-        # when the files' row groups allow. Scale-correct: at
-        # production split counts (≫ cores) it is a no-op, unlike
-        # lowering maxPartitionBytes, which would fragment large scans.
-        .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
+        # No scan floor is set here. Spark's own floor
+        # (spark.sql.files.minPartitionNum unset → leafNodeDefaultParallelism
+        # → defaultParallelism: the cores of local[N], the total executor
+        # cores on a cluster) already shrinks the splits of a single
+        # large file just enough to hand each core work. A floor ABOVE
+        # the core count cuts single-row-group files into a split that
+        # holds the row group plus a tail that holds none: measured on
+        # 4 files × 1 row group at local[4], a floor of 8 gave 8 annotate
+        # tasks, 4 of them empty and scheduled as a second wave.
         .config("spark.task.cpus", str(task_cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

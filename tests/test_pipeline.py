@@ -282,6 +282,98 @@ def test_input_fingerprint_guard_refuses_remapped_resume(spark, web_df, tmp_path
     pipe2.run(spark.read.parquet(src3), task_ts=TASK_TS)
 
 
+@pytest.mark.parametrize(
+    "key, value",
+    [("spark.sql.files.openCostInBytes", "1MB"), ("spark.sql.files.minPartitionNum", "3")],
+)
+def test_input_fingerprint_guard_records_split_conf(spark, web_df, tmp_path, key, value):
+    """The split layout, and so every input_partition bucket id, also
+    depends on the per-file open cost and on an explicit scan floor: a
+    resume after either changed must refuse like a changed listing."""
+    src = str(tmp_path / "src")
+    web_df.repartition(6).write.parquet(src)
+    pipe = QualityFilterPipeline(
+        spark, str(tmp_path / "run"), PipelineConfig(bucket_by="input_partition")
+    )
+    pipe.run(spark.read.parquet(src), task_ts=TASK_TS)
+    before = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, value)
+        with pytest.raises(ValueError, match="input_partition resume refused"):
+            pipe.run(spark.read.parquet(src), task_ts=TASK_TS)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def test_scan_floor_follows_cores_not_shuffle_partitions(spark, tmp_path):
+    """get_spark sets no scan floor, so Spark's default (the core count)
+    applies however many shuffle partitions are asked for: 4 files of
+    one row group each on local[4] scan as 4 splits and an
+    input_partition run writes them with 4 tasks. A floor of 8 would
+    cut every file into a split holding the row group and an empty
+    tail (8 tasks, 4 of them with no rows)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from contessa_spark.session import get_spark
+
+    src = tmp_path / "src"
+    src.mkdir()
+    rng = np.random.default_rng(0)
+    for f in range(4):
+        rows = [gen_row(i, seed=42) for i in range(f * 50, (f + 1) * 50)]
+        table = pa.Table.from_pylist(
+            [
+                {k: r[k] for k in ("url", "warc_ts", "text", "lang")}
+                # incompressible padding: files of ~6 MB, well above the
+                # 4 MB open cost, so the floor decides the split size
+                | {"pad": rng.bytes(120_000)}
+                for r in rows
+            ]
+        )
+        pq.write_table(table, src / f"part-{f}.parquet")
+        assert pq.ParquetFile(src / f"part-{f}.parquet").num_row_groups == 1
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.files.minPartitionNum")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    sc = spark.sparkContext
+    try:
+        session = get_spark(master="local[4]", shuffle_partitions=8)
+        assert session is spark
+        assert session.conf.get("spark.sql.shuffle.partitions") == "8"
+        df = session.read.parquet(str(src))
+        assert df.rdd.getNumPartitions() == 4
+
+        sc.setJobGroup("scan_floor_test", "input_partition run")
+        pipe = QualityFilterPipeline(
+            session, str(tmp_path / "run"), PipelineConfig(bucket_by="input_partition")
+        )
+        summary = pipe.run(df, task_ts=TASK_TS)
+        assert summary["input"] == 200
+        assert summary["buckets_done"] == 4
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(sid)
+            for jid in tracker.getJobIdsForGroup("scan_floor_test")
+            for sid in tracker.getJobInfo(jid).stageIds
+        ]
+        # the write is the only job that scans the input file splits
+        write = [st for st in stages if st.name.startswith("parquet at")]
+        assert [st.numTasks for st in write] == [4]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def test_validate_mode_respects_full_mode_checkpoints(spark, web_df, tmp_path):
     """The fingerprint guard must treat completed buckets in EITHER
     lineage namespace as "resuming": a validate-mode run (no validate
